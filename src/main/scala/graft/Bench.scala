@@ -198,10 +198,13 @@ object Bench {
         w.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
       } catch { case _: Throwable => Long.MaxValue }
+    // the cheap fixed small SF: the warm dir when no twin applies, and
+    // the fallback slice's corpus below
+    val fallback = sys.env.getOrElse("SPARK_GRAFT_WARM_FALLBACK_DIR",
+      "/root/testdata/sf0.001")
     val warmDir = sys.env.get("SPARK_GRAFT_WARM_SF_DIR").getOrElse {
       val capMb = sys.env.get("SPARK_GRAFT_WARM_TWIN_MAX_MB")
         .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(256L)
-      val fallback = "/root/testdata/sf0.001"
       if (sys.env.contains("SPARK_GRAFT_NO_WARM") ||
           dirBytes(sfDir) > (capMb << 20)) fallback
       else {
@@ -260,8 +263,11 @@ object Bench {
     // corpus: same generated classes for every size-INdependent plan,
     // shared JIT primitives for the rest), under its own disclosed
     // budget (default 120 s, SPARK_GRAFT_WARM_FALLBACK_BUDGET_SEC).
-    // Worst case the whole warm machinery is bounded at
-    // budget + fallbackBudget + the touch, regardless of host speed.
+    // SPARK_GRAFT_WARM_FALLBACK_DIR names that corpus. Both budgets are
+    // checked only BETWEEN queries, so each slice can overshoot its
+    // budget by the runtime of the one query in flight when it expires:
+    // the warm machinery takes at most budget + fallbackBudget + the
+    // touch + two single-query runtimes, whatever the host speed.
     val warmBudget = sys.env.get("SPARK_GRAFT_WARM_BUDGET_SEC")
       .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(300.0)
     val warmFallbackBudget = sys.env.get("SPARK_GRAFT_WARM_FALLBACK_BUDGET_SEC")
@@ -269,6 +275,10 @@ object Bench {
     var warmN = 0
     var warmFallbackN = 0
     var warmFallbackSec = -1.0
+    // why queries the twin budget left over stay cold: the fallback dir
+    // is "missing" or "same_as_sf" (the measured or the warm dir itself),
+    // or its slice ran out of "budget"; null when none were left
+    var warmFallbackSkip: Option[String] = None
     if (!sys.env.contains("SPARK_GRAFT_NO_WARM") &&
         new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir)) {
       val w0 = System.nanoTime()
@@ -285,18 +295,22 @@ object Bench {
         sweep()
         warmN += 1
       }
-      val smallDir = "/root/testdata/sf0.001"
-      if (it.hasNext && new java.io.File(smallDir).isDirectory &&
-          canon(smallDir) != canon(sfDir) && canon(smallDir) != canon(warmDir)) {
+      if (it.hasNext && !new java.io.File(fallback).isDirectory)
+        warmFallbackSkip = Some("missing")
+      else if (it.hasNext && (canon(fallback) == canon(sfDir) ||
+          canon(fallback) == canon(warmDir)))
+        warmFallbackSkip = Some("same_as_sf")
+      else if (it.hasNext) {
         val f0 = System.nanoTime()
         while (it.hasNext && (System.nanoTime() - f0) / 1e9 < warmFallbackBudget) {
           val fn = it.next()._2
-          try fn(spark, smallDir).write.format("noop").mode("overwrite").save()
+          try fn(spark, fallback).write.format("noop").mode("overwrite").save()
           catch { case _: Throwable => () }
           sweep()
           warmFallbackN += 1
         }
         warmFallbackSec = (System.nanoTime() - f0) / 1e9
+        if (it.hasNext) warmFallbackSkip = Some("budget")
       }
       spark.catalog.clearCache()
       if (!sys.env.contains("SPARK_GRAFT_NO_GC")) System.gc()
@@ -568,7 +582,7 @@ object Bench {
       if (v < 0) "null"
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val warmJson =
-      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_budget_sec":${num(warmBudget)},"warm_queries":$warmN,"warm_fallback_queries":$warmFallbackN,"warm_fallback_sec":${num(warmFallbackSec)},"warm_complete":${warmN + warmFallbackN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
+      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_budget_sec":${num(warmBudget)},"warm_queries":$warmN,"warm_fallback_queries":$warmFallbackN,"warm_fallback_sec":${num(warmFallbackSec)},"warm_fallback_dir":"${esc(fallback)}","warm_fallback_skip":${warmFallbackSkip.fold("null")(r => "\"" + r + "\"")},"warm_complete":${warmN + warmFallbackN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_ok":${results.size},"n_err":${errors.size},"errors":$errJson,"retries":$retryJson,"retry_diag":$retryDiagJson,"retry_errors":$retryErrJson,"warm":$warmJson,"canary_sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(canarySec))},"sf":"${esc(sfDir)}"}"""
     println(line)
     // the full line above exceeds tail-window captures at ~90 queries

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterBridge
 import org.apache.spark.sql.functions._
 
 /** Warehouse catalog over parquet-backed tables.
@@ -9,6 +10,12 @@ import org.apache.spark.sql.functions._
   * commands.sql:32-62); here a "warehouse" is a directory of parquet tables
   * read through Spark's vectorized reader. Table registration mirrors
   * Snowflake name resolution (SURVEY.md §1.1).
+  *
+  * Every read goes through [[readParquet]], which resolves the table's
+  * schema on the driver from one parquet footer — the file Spark's own
+  * inference would pick — and hands it to the reader, so opening a table
+  * starts no Spark job (Snowflake answers the same question from catalog
+  * metadata). Nothing is cached: each call reads the current footer.
   */
 object Tables {
   /** Driver-provided test tables (TESTDATA.md). */
@@ -29,17 +36,66 @@ object Tables {
     // state, so doing it on every call taxes every reader.
     if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    val nanosFixed = df.schema.fields.find(f => f.name == "ts" &&
-        f.dataType == org.apache.spark.sql.types.LongType) match {
-      case Some(_) if name == "events" =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => df
+    val df = readParquet(spark, s"$dir/$name.parquet")
+    // one projection for every fix: each withColumn re-analyzes the plan
+    val fixes = df.schema.fields.collect {
+      case f if f.name == "ts" && name == "events" &&
+          f.dataType == org.apache.spark.sql.types.LongType =>
+        f.name -> timestamp_micros(expr("ts div 1000"))
+      case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType =>
+        f.name -> col(f.name).cast(org.apache.spark.sql.types.TimestampType)
     }
-    val ntz = nanosFixed.schema.fields.filter(
-      _.dataType == org.apache.spark.sql.types.TimestampNTZType)
-    ntz.foldLeft(nanosFixed)((d, f) =>
-      d.withColumn(f.name, col(f.name).cast(org.apache.spark.sql.types.TimestampType)))
+    if (fixes.isEmpty) df else df.withColumns(fixes.toMap)
+  }
+
+  /** `spark.read.parquet(path)` without the schema-inference job: the
+    * schema comes from one footer read on the driver
+    * ([[schemaFile]] picks it by Spark's own rule), then
+    * `spark.read.schema(s).parquet(path)` lists and plans as before.
+    * With `spark.sql.parquet.mergeSchema` on, with no footer to read
+    * (empty or missing directory, or a glob pattern, which names no
+    * file), or when the driver-side read fails,
+    * this IS `spark.read.parquet(path)`, so merge behaviour and errors
+    * stay Spark's own. Partition columns are still discovered from the
+    * paths by Spark; the footer schema only replaces the data schema
+    * Spark would have inferred. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+      else try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        schemaFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+          .flatMap(ParquetFooterBridge.footerSchema(spark, _))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The one file whose footer Spark's schema inference reads when
+    * mergeSchema is off (`ParquetUtils.inferSchema`): a plain file as it
+    * is; under a directory, over the leaves Spark lists (hidden `_`/`.`
+    * names skipped, `k=v` partition directories descended) sorted by
+    * path, `_common_metadata`, else `_metadata`, else the first data
+    * file. None when there is no leaf, or when a subdirectory is not a
+    * partition directory — a layout whose reading Spark should judge. */
+  private def schemaFile(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] = {
+    val root = fs.getFileStatus(path)
+    if (!root.isDirectory) return Some(root)
+    val leaves = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.hadoop.fs.FileStatus]
+    def walk(dir: org.apache.hadoop.fs.Path): Boolean =
+      fs.listStatus(dir)
+        .filterNot(s => ParquetFooterBridge.hiddenName(s.getPath.getName))
+        .forall { s =>
+          if (!s.isDirectory) { leaves += s; true }
+          else s.getPath.getName.contains("=") && walk(s.getPath)
+        }
+    if (!walk(path)) return None
+    val sorted = leaves.sortBy(_.getPath.toString)
+    def named(n: String) = sorted.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata")).orElse(
+      sorted.find(s => s.getPath.getName != "_common_metadata" &&
+        s.getPath.getName != "_metadata"))
   }
 
   /** Register every table as a temp view so `spark.sql` resolves bare names,
@@ -286,7 +342,7 @@ object Tables {
     val before = parquetFiles
     val totalBytes = before.map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    replaceAtomic(spark, dir, spark.read.parquet(dir).repartition(nFiles))
+    replaceAtomic(spark, dir, readParquet(spark, dir).repartition(nFiles))
     (before.length, parquetFiles.length)
   }
 
@@ -346,10 +402,10 @@ object Tables {
         !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
     if (partDirs.isEmpty) {
-      if (!spark.read.parquet(dir)
+      if (!readParquet(spark, dir)
           .join(victims, Seq(idColName), "left_semi").isEmpty)
         replaceAtomic(spark, dir,
-          spark.read.parquet(dir).join(victims, Seq(idColName), "left_anti"))
+          readParquet(spark, dir).join(victims, Seq(idColName), "left_anti"))
     } else {
       // a SECOND partition level would be flattened by the per-directory
       // rewrite below (the anti-join result carries the nested key as a
@@ -377,7 +433,7 @@ object Tables {
       val affected =
         try {
           spark.conf.set(inferKey, "false")
-          spark.read.parquet(dir)
+          readParquet(spark, dir)
             .join(victims, Seq(idColName), "left_semi")
             .select(col(partCol).cast("string")).distinct()
             .collect().map(r => Option(r.getString(0)))
@@ -397,7 +453,7 @@ object Tables {
         // the partition column lives in the path, not the files — the
         // anti-join below only touches real file columns
         replaceAtomic(spark, pd,
-          spark.read.parquet(pd).join(victims, Seq(idColName), "left_anti"))
+          readParquet(spark, pd).join(victims, Seq(idColName), "left_anti"))
       }
     }
   }
@@ -459,7 +515,7 @@ object Tables {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) df
     else df.join(
-      broadcast(spark.read.parquet(tombDir)
+      broadcast(readParquet(spark, tombDir)
         .select(col("id").as(idColName)).distinct()),
       Seq(idColName), "left_anti")
   }
@@ -543,7 +599,7 @@ object Tables {
         replaceAtomicFirstWrite(spark, fs, tmp, path, build, stamp)
       }
     }
-    spark.read.parquet(dir)
+    readParquet(spark, dir)
   }
 
   private def replaceAtomicFirstWrite(spark: SparkSession,

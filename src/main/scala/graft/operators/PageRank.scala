@@ -94,18 +94,7 @@ object PageRank {
       var r = deg.select(col("node"), col("deg"),
         round(lit(1.0 / n), 12).as("r"))
       var prevCkpt: Option[DataFrame] = None
-      // checkpoint cadence: how many iterations ride one lineage before
-      // the state is re-materialized. Cadence trades per-round
-      // checkpoint jobs against optimizer-visible plan depth (an
-      // `iters`-deep join tree measured a 14.4 s analysis blow-up at
-      // sf0.1 in round 11); 2 re-measured optimal this round (ABAB at
-      // sf0.1 and the ~sf1 leg — see OPTIMIZATION_r14.md) against 3
-      // and 5. Conf/env-overridable so the next scale regime can
-      // re-measure instead of re-patching.
-      val cadence = math.max(1, sys.env.get("SPARK_GRAFT_PAGERANK_CADENCE")
-        .orElse(scala.util.Try(edges0.sparkSession.conf
-          .get("spark.graft.pagerank.ckptCadence")).toOption)
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(2))
+      val cadence = ckptCadence(edges0.sparkSession)
       // the whole fit loop runs under iteration conf (AQE off, shuffle
       // width sized from the known n-row state): every checkpoint
       // materialization becomes ONE pipelined job instead of a stage-
@@ -172,6 +161,26 @@ object PageRank {
       r.select(col("node"), col("deg"), col("r").as("rank"))
     }
   }
+
+  /** Upper bound on [[ckptCadence]]: a cadence near `iters` brings back
+    * the `iters`-deep plan whose analysis blew up. */
+  val MaxCkptCadence = 8
+
+  /** Checkpoint cadence: how many iterations ride one lineage before
+    * the state is re-materialized. Cadence trades per-round checkpoint
+    * jobs against optimizer-visible plan depth (an `iters`-deep join
+    * tree measured a 14.4 s analysis blow-up at sf0.1 in round 11); 2
+    * re-measured optimal (ABAB at sf0.1 and the ~sf1 leg — see
+    * OPTIMIZATION_r14.md) against 3 and 5. Overridable by
+    * `SPARK_GRAFT_PAGERANK_CADENCE` or `spark.graft.pagerank.ckptCadence`
+    * so the next scale regime can re-measure instead of re-patching;
+    * clamped to [1, [[MaxCkptCadence]]]. */
+  def ckptCadence(spark: org.apache.spark.sql.SparkSession): Int =
+    sys.env.get("SPARK_GRAFT_PAGERANK_CADENCE")
+      .orElse(scala.util.Try(spark.conf
+        .get("spark.graft.pagerank.ckptCadence")).toOption)
+      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(2)
+      .max(1).min(MaxCkptCadence)
 
   /** DuckDB twin over an edge CTE named `e` (columns src, dst, already
     * distinct, no danglings): the same damped iterations unrolled

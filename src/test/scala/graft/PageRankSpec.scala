@@ -62,6 +62,23 @@ class PageRankSpec extends SparkSuite {
     assert((2L to 9L).map(star).distinct.size === 1, "leaves should tie")
   }
 
+  test("an oversized checkpoint-cadence override runs at the clamp, ranks unchanged") {
+    val rng = new scala.util.Random(29)
+    val directed = (0 until 120).map(_ =>
+      (rng.nextInt(40).toLong, rng.nextInt(40).toLong))
+    val edges = directed ++ directed.map(_.swap)
+    val key = "spark.graft.pagerank.ckptCadence"
+    val default = run(edges, iters = 12)
+    spark.conf.set(key, "1000")
+    val clamped =
+      try {
+        assert(PageRank.ckptCadence(spark) === PageRank.MaxCkptCadence)
+        run(edges, iters = 12)
+      } finally spark.conf.unset(key)
+    assert(clamped === default)
+    assert(clamped === ref(edges, iters = 12, damping = 0.85))
+  }
+
   test("parallel edges collapse; dangling sinks fail fast") {
     val multi = run(Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 1L)))
     assert(multi === run(Seq((1L, 2L), (2L, 1L))))

@@ -42,6 +42,32 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Run `body` and count the Spark jobs it starts. Only jobs carrying
+    * this call's job tag count — tags are inherited by the threads a
+    * query spawns (broadcasts, subqueries) but not by jobs other
+    * threads of the JVM happen to run meanwhile. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.addJobTag(tag)
+    try {
+      val r = body
+      org.apache.spark.GraftTestContext.drainListenerBus(sc)
+      (r, n.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(l)
+    }
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")

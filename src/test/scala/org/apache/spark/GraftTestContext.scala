@@ -21,6 +21,10 @@ object GraftTestContext {
     SparkContext.getActive.filter(_.isStopped)
       .foreach(_ => SparkContext.clearActiveContext())
 
+  /** Block until every event posted so far has reached the listeners
+    * (the bus is asynchronous), so a test listener's count is final. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Simulate the half-stopped failure mode for the recovery spec: mark the
     * context stopped WITHOUT running any of stop()'s cleanup, exactly the
     * state a mid-teardown crash leaves behind (stopped=true, activeContext
